@@ -52,7 +52,8 @@ def attempt(name: str, call: Callable[[], object], check: Callable[[object], lis
 class Iteration:
     attempts: list[Attempt]
     wall_s: float
-    cpu_s: float
+    cpu_s: float  # without the sampler's own CPU
+    sampler_cpu_s: float
     peak_rss_mb: float
     steal_pct: float
     load_1m: float
@@ -67,19 +68,22 @@ def timed_loop(iterate: Callable[[], list[Attempt]], seconds: float,
                sampler: procstat.PeakSampler) -> list[Iteration]:
     """Closed loop with one client: the next iteration starts when the
     previous one ends, until ``seconds`` have passed (at least one).
-    Each iteration records its process-tree CPU, peak RSS, hypervisor
-    steal, load average and tree size so an outlier can be explained."""
+    Each iteration records its process-tree CPU less the sampler's own,
+    peak RSS, hypervisor steal, load average and tree size so an
+    outlier can be explained."""
     out: list[Iteration] = []
     deadline = time.perf_counter() + seconds
     while not out or time.perf_counter() < deadline:
         sampler.reset()
         cpu0, steal0 = procstat.tree_cpu_s(), procstat.steal_ticks()
+        own0 = sampler.own_cpu_s()
         t0 = time.perf_counter()
         attempts = iterate()
         wall = time.perf_counter() - t0
-        cpu = procstat.tree_cpu_s() - cpu0
+        own = sampler.own_cpu_s() - own0
+        cpu = procstat.tree_cpu_s() - cpu0 - own
         rss, _ = sampler.peaks()
-        out.append(Iteration(attempts, wall, cpu, rss,
+        out.append(Iteration(attempts, wall, cpu, own, rss,
                              procstat.steal_pct(steal0, procstat.steal_ticks()),
                              procstat.loadavg_1m(), len(procstat.tree_pids())))
     return out
@@ -96,7 +100,9 @@ class Tracer:
     """Spans around the benchmark's calls into each layer: name, start,
     end, parent and run id, with process-tree CPU, Spark task counts
     per job group and codegen fallbacks counted from the captured Spark
-    log. Spans stay in memory until ``write``."""
+    log. The sampler scans the scratch directory only while a span is
+    open, and its own CPU is left out of the span's. Spans stay in
+    memory until ``write``."""
 
     def __init__(self, spark, run_id: str, log_path: str, cores: int,
                  sampler: procstat.PeakSampler):
@@ -140,15 +146,17 @@ class Tracer:
         sc = self.spark.sparkContext
         sc.setJobGroup(group, name)
         self._stack.append(sid)
+        self.sampler.scan_scratch = True
         self.sampler.reset()
         scratch0 = procstat.dir_mb(self.sampler.scratch_dir)
         log0, cpu0 = self._log_offset(), procstat.tree_cpu_s()
+        own0 = self.sampler.own_cpu_s()
         t0 = time.perf_counter()
         try:
             yield rec
         finally:
             t1 = time.perf_counter()
-            cpu = procstat.tree_cpu_s() - cpu0
+            cpu = procstat.tree_cpu_s() - cpu0 - (self.sampler.own_cpu_s() - own0)
             _, scratch = self.sampler.peaks()
             self._stack.pop()
             sc.setLocalProperty("spark.jobGroup.id", None)
@@ -163,9 +171,16 @@ class Tracer:
             )
             if self._stack:  # the parent's job group resumes
                 sc.setJobGroup(f"{self.run_id}-{self._stack[-1]}", self.spans[self._stack[-1]]["name"])
+            else:
+                self.sampler.scan_scratch = False
 
     def total(self, name: str, key: str = "wall_s") -> float:
         return sum(s.get(key, 0.0) for s in self.spans if s["name"] == name)
+
+    def failed_tasks(self) -> int:
+        """Failed Spark tasks over all spans; each span has its own job
+        group, so no task counts twice."""
+        return sum(s.get("failed_tasks", 0) for s in self.spans)
 
     def cpu_util(self, name: str) -> float:
         wall = self.total(name)

@@ -161,7 +161,9 @@ def near_dup_corpus(
     shuffles, over a fixed vocabulary: the seed changes the text and
     which page is long or duplicated, not the total work (winnow's cost
     grows with the square of page length, so sampled lengths would
-    swing it from seed to seed)."""
+    swing it from seed to seed). The length tail ``sigma``, the
+    re-crawl mix, ``edit_rate`` and the vocabulary's Zipf exponent are
+    assumptions, not fitted to a crawl: see README.md."""
     # one vocabulary for every seed: which words are frequent (and how
     # long they are) sets the shingle and fingerprint skew
     vocab = _vocab(random.Random("near_dup:vocabulary"), 8000)

@@ -129,12 +129,16 @@ def dir_mb(path: str) -> float:
 
 
 class PeakSampler:
-    """Background sampler of the tree's summed RSS and of the size of a
+    """Background sampler of the tree's summed RSS and, while
+    ``scan_scratch`` is set (inside traced spans only), of the size of a
     scratch directory. ``reset()`` starts a new peak window; ``peaks()``
-    reads the maxima since the last reset."""
+    reads the maxima since the last reset. The sampler runs in this
+    process, so its own CPU lands in the tree's; ``own_cpu_s()`` reads
+    it so that callers can take it out again."""
 
-    def __init__(self, scratch_dir: str, interval_s: float = 0.2):
+    def __init__(self, scratch_dir: str, interval_s: float = 0.5):
         self.scratch_dir = scratch_dir
+        self.scan_scratch = False
         self._interval = interval_s
         self._lock = threading.Lock()
         self._rss = 0.0
@@ -150,22 +154,38 @@ class PeakSampler:
         self._stop.set()
         self._thread.join(timeout=10)
 
+    def _scratch(self) -> float:
+        return dir_mb(self.scratch_dir) if self.scan_scratch else 0.0
+
     def _loop(self) -> None:
         while not self._stop.is_set():
             rss = tree_rss_mb()
-            scratch = dir_mb(self.scratch_dir)
+            scratch = self._scratch()
             with self._lock:
                 self._rss = max(self._rss, rss)
                 self._scratch_mb = max(self._scratch_mb, scratch)
             self._stop.wait(self._interval)
 
+    def own_cpu_s(self) -> float:
+        """CPU seconds the sampler thread has used so far."""
+        tid = self._thread.native_id
+        if tid is None:
+            return 0.0
+        try:
+            with open(f"/proc/self/task/{tid}/stat", "rb") as fh:
+                raw = fh.read()
+        except OSError:  # the thread has ended
+            return 0.0
+        f = raw[raw.rindex(b")") + 2 :].split()
+        return (int(f[11]) + int(f[12])) / _TICK  # utime stime
+
     def reset(self) -> None:
         with self._lock:
             self._rss = tree_rss_mb()
-            self._scratch_mb = dir_mb(self.scratch_dir)
+            self._scratch_mb = self._scratch()
 
     def peaks(self) -> tuple[float, float]:
         """(peak tree RSS MB, peak scratch MB) since the last reset."""
-        rss, scratch = tree_rss_mb(), dir_mb(self.scratch_dir)
+        rss, scratch = tree_rss_mb(), self._scratch()
         with self._lock:
             return max(self._rss, rss), max(self._scratch_mb, scratch)

@@ -40,7 +40,7 @@ def _quartiles(values: list[float]) -> str:
 
 
 def emit(wl, args, cores: int, setup: Setup, iterations: list[Iteration], layers) -> int:
-    attempts = [a for it in iterations for a in it.attempts]
+    attempts = [a for it in iterations for a in it.attempts] + wl.traced
     failed = [a for a in attempts if not a.ok]
     check_failed = [a for a in failed if a.problems]
     ok_its = [it for it in iterations if all(a.ok for a in it.attempts)]
@@ -69,7 +69,8 @@ def emit(wl, args, cores: int, setup: Setup, iterations: list[Iteration], layers
           f"{len(setup.gen_s)} {statistics.median(setup.gen_s):.3f}s "
           f"({', '.join(f'{g:.3f}' for g in setup.gen_s)}), warm-up {setup.warm_s:.3f}s", file=out)
     for i, it in enumerate(iterations):
-        print(f"# iteration {i}: wall {it.wall_s:.3f}s cpu {it.cpu_s:.2f}s rss {it.peak_rss_mb:.0f}MB "
+        print(f"# iteration {i}: wall {it.wall_s:.3f}s cpu {it.cpu_s:.2f}s (sampler {it.sampler_cpu_s:.2f}s) "
+              f"rss {it.peak_rss_mb:.0f}MB "
               f"steal {it.steal_pct:.2f}% load {it.load_1m:.2f} processes {it.processes} "
               + " ".join(f"{a.name}={a.wall_s:.3f}s{'' if a.ok else '(FAILED)'}" for a in it.attempts),
               file=out)

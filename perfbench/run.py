@@ -148,11 +148,7 @@ def main(argv=None) -> int:
         spark = get_spark(
             app_name="perfbench", cpus=cores,
             extra_conf={
-                # the heap is sized and touched up front, so the tree's
-                # resident memory does not follow the collector's heap
-                # growth from run to run
                 "spark.driver.extraJavaOptions":
-                    f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch "
                     f"-Djava.io.tmpdir={os.path.join(WORK, 'tmp')} -XX:-UsePerfData",
                 "spark.sql.warehouse.dir": os.path.join(WORK, "warehouse"),
             },
@@ -180,6 +176,7 @@ def main(argv=None) -> int:
                 untraced = median([it.wall_s for it in iterations if all(a.ok for a in it.attempts)])
                 tracer = Tracer(spark, f"{args.workload}-{args.seed}", log_path, cores, sampler)
                 layers = wl.trace(tracer, untraced)
+                layers["failed_tasks"] = tracer.failed_tasks()
                 tracer.write(os.path.join(WORK, "spans.jsonl"))
     finally:
         _stop_tree(spark)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -123,3 +124,79 @@ def test_result_line_shape():
     line = harness.result_line(True, 3, 0, {"setup_s": (1.5, "s")})
     assert json.loads(line) == {"correct": True, "attempted": 3, "failed": 0,
                                 "metrics": {"setup_s": {"value": 1.5, "unit": "s"}}}
+
+
+class _FakeStatusTracker:
+    """Jobs per group, stages per job: (completed, failed) tasks."""
+
+    def __init__(self, groups):
+        self.groups = groups  # group -> [[(done, failed) per stage] per job]
+        self.jobs, self.stages = {}, {}
+
+    def getJobIdsForGroup(self, group):
+        ids = []
+        for stages in self.groups.get(group, []):
+            job = len(self.jobs)
+            self.jobs[job] = SimpleNamespace(stageIds=[])
+            for done, failed in stages:
+                sid = len(self.stages)
+                self.stages[sid] = SimpleNamespace(numCompletedTasks=done, numFailedTasks=failed)
+                self.jobs[job].stageIds.append(sid)
+            ids.append(job)
+        return ids
+
+    def getJobInfo(self, job):
+        return self.jobs[job]
+
+    def getStageInfo(self, sid):
+        return self.stages[sid]
+
+
+class _FakeSampler:
+    scan_scratch = False
+
+    def __init__(self, scratch_dir):
+        self.scratch_dir = scratch_dir
+
+    def reset(self):
+        pass
+
+    def peaks(self):
+        return 0.0, 0.0
+
+    def own_cpu_s(self):
+        return 0.0
+
+
+def test_failed_tasks_are_summed_over_spans(tmp_path):
+    tracker = _FakeStatusTracker({"r-1": [[(4, 0), (3, 2)]], "r-2": [[(5, 1)]]})
+    sc = SimpleNamespace(statusTracker=lambda: tracker, setJobGroup=lambda *a: None,
+                         setLocalProperty=lambda *a: None)
+    log = tmp_path / "spark.log"
+    log.write_text("")
+    tracer = harness.Tracer(SimpleNamespace(sparkContext=sc), "r", str(log), 4, _FakeSampler(str(tmp_path)))
+    with tracer.span("root"):  # group r-0: no jobs of its own
+        with tracer.span("a"):
+            pass
+        with tracer.span("b"):
+            pass
+    assert [s["failed_tasks"] for s in tracer.spans] == [0, 2, 1]
+    assert [s["tasks"] for s in tracer.spans] == [0, 7, 5]
+    assert tracer.failed_tasks() == 3
+
+
+def test_skipped_traced_attach_fails_the_run(tmp_path, capsys):
+    from perfbench import report
+    from perfbench.workloads import Context, Workload
+
+    wl = Workload(Context(None, str(tmp_path), 1, 4, 0.0))
+    wl.record(5, 0, 1, "d")
+    wl.note_traced("attach 2", 0.0, ["skipped: too close to the run's time limit"], 0)
+    it = harness.Iteration([harness.Attempt("run", True, 10, 1.0)], 1.0, 2.0, 0.0, 100.0, 0.0, 0.1, 5)
+    code = report.emit(wl, SimpleNamespace(seed=1, seconds=1, trace=1), 4,
+                       report.Setup(1.0, [1.0], 1.0), [it], {})
+    out = capsys.readouterr().out.splitlines()
+    result = json.loads(out[-1])
+    assert code == 1
+    assert (result["correct"], result["attempted"], result["failed"]) == (False, 2, 1)
+    assert any("failed attach 2: skipped" in line for line in out)

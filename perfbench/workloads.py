@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import sys
 import time
 from dataclasses import dataclass
 
@@ -25,8 +24,8 @@ from .harness import Attempt, Tracer, attempt
 # that the stage work shows beside the per-job overheads
 ER_BATCH_PAGES = 1500
 ER_WARM_UP_PAGES = 200
-ER_ATTACH_DELTA = 150  # x3 chained attaches, each 10% of the base
-ATTACH_BUDGET_S = 30  # an attach takes 16-20 s at 4 cores
+ER_ATTACH_DELTA = 150  # per chained attach: 10% of the base
+ATTACH_BUDGET_S = 25  # an attach takes 17-21 s at 4 cores
 NEAR_DUP_DOCS = 200
 
 # per-layer metrics every traced run reports (0 where the workload does
@@ -54,7 +53,6 @@ PER_LAYER = {
     "plans.pipeline.overhead_s": "s",
     "plans.pipeline.incremental.attach_1_s": "s",
     "plans.pipeline.incremental.attach_2_s": "s",
-    "plans.pipeline.incremental.attach_3_s": "s",
     "plans.pipeline.incremental.candidates": "count",
     "plans.pipeline.incremental.matches": "count",
     "sources.sinks.checkpoint_mb": "MB",
@@ -101,6 +99,7 @@ class Workload:
         self.data = os.path.join(ctx.work, "inputs")
         self.ckpt = os.path.join(ctx.work, "checkpoint")
         self.outcomes: list[Outcome] = []
+        self.traced: list[Attempt] = []  # operations of the traced iteration
 
     def make_inputs(self) -> None:
         raise NotImplementedError
@@ -126,6 +125,11 @@ class Workload:
         self.outcomes.append(Outcome(tp, fp, fn, dig))
         return []
 
+    def note_traced(self, name: str, wall_s: float, problems: list[str], records: int) -> None:
+        """Count an operation of the traced iteration like a timed one:
+        one whose check found problems is failed and fails the run."""
+        self.traced.append(Attempt(name, not problems, 0 if problems else records, wall_s, problems))
+
     def quality(self) -> tuple[float, float, float]:
         o = self.outcomes[-1]
         return quality.prf(o.tp, o.fp, o.fn)
@@ -140,12 +144,14 @@ def _labels_of(df):
 
 class ErBatch(Workload):
     """Full batch run of the golden model, no labels, no reports. Its
-    traced run also times three chained incremental attaches onto the
+    traced run also times two chained incremental attaches onto the
     traced run's checkpoint (the attach path has no workload of its
     own: see README.md)."""
 
     name = "er_batch"
-    ATTACHES = 3
+    # a third attach (~20 s) would bring the traced run to ~165 s, too
+    # close to its 180 s limit on a shared host
+    ATTACHES = 2
     # (stage passed as run(until=...), layer module it runs); None = full run
     STEPS = (
         ("extract", "operators.extract"),
@@ -217,7 +223,8 @@ class ErBatch(Workload):
                     out = pipe.run(pages, until=stage)
                     if stage is None:
                         labels = _labels_of(out)
-        _raise_on(self.check_labels(labels, self.base_ids), "traced run")
+        self.note_traced("traced run", root["wall_s"], self.check_labels(labels, self.base_ids),
+                         ER_BATCH_PAGES)
         rows = lambda st: self.sinks.manifest_rows(self.ckpt, st)  # noqa: E731
         keys = self.sinks.read_stage(self.spark, self.ckpt, "block").select("block_key").distinct().count()
         stage_s = sum(s["wall_s"] for s in tracer.spans if s["parent"] == root["id"])
@@ -249,24 +256,22 @@ class ErBatch(Workload):
         for k in range(1, self.ATTACHES + 1):
             if time.perf_counter() + ATTACH_BUDGET_S > self.ctx.deadline:
                 # a slow host: an attach started now could overrun the
-                # run's time limit, which would lose every metric
-                print(f"# attach {k} skipped: too close to the run's time limit", file=sys.stderr)
-                break
+                # run's time limit, which would lose every metric. A
+                # skipped attach fails the run, so its 0 is never read
+                # as a time.
+                self.note_traced(f"attach {k}", 0.0, ["skipped: too close to the run's time limit"], 0)
+                continue
             with tracer.span("plans.pipeline.incremental", attach=k) as sp:
                 labels = _labels_of(pipe.incremental(self.pages(k)))
-            known = self._known(k)
-            _raise_on(quality.label_problems([r for r, _ in labels], [c for _, c in labels], known),
-                      f"attach {k}")
+            self.note_traced(f"attach {k}", sp["wall_s"],
+                             quality.label_problems([r for r, _ in labels], [c for _, c in labels],
+                                                    self._known(k)),
+                             ER_ATTACH_DELTA)
             m[f"plans.pipeline.incremental.attach_{k}_s"] = sp["wall_s"]
         inc = [os.path.join(self.ckpt, f"inc={k}") for k in range(1, len(m) + 1)]  # attaches done
         m["plans.pipeline.incremental.candidates"] = sum(self.sinks.manifest_rows(d, "pairs") for d in inc)
         m["plans.pipeline.incremental.matches"] = sum(self.sinks.manifest_rows(d, "classify") for d in inc)
         return m
-
-
-def _raise_on(problems: list[str], what: str) -> None:
-    if problems:
-        raise RuntimeError(f"{what} output failed its check: " + "; ".join(problems))
 
 
 # -- near_dup -----------------------------------------------------------------
@@ -338,10 +343,11 @@ class NearDup(Workload):
 
     def trace(self, tracer: Tracer, untraced_s: float) -> dict[str, float]:
         m: dict[str, float] = {}
+        self.pairs = {}
         for family, layer in self.FAMILIES:
             with tracer.span(layer) as sp:
                 pairs = self._call(family)
-            _raise_on(quality.pair_problems(pairs), f"traced {family}")
+            self.note_traced(f"traced {family}", sp["wall_s"], self._check(family, pairs), NEAR_DUP_DOCS)
             m[f"{layer}.s"] = sp["wall_s"]
             m[f"{layer}.pairs"] = len(pairs)
             if family != "embedding":
